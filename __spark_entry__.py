@@ -21,34 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 # tail is COMPUTED from the CORRECTNESS_r*.json history at import time
 # (tools/staleness.py holds the same logic as a CLI). Only the
 # new/changed head remains hand-maintained, per round:
-_NEW_OR_CHANGED = (
-    # round 11 head (cap 5 this round — VERDICT r10 next-round #1: the
-    # POST-landing invariant needs head + (head + 40 r7-stale
-    # leftovers) ≤ 50, so head ≤ 5; the count itself is len()-derived
-    # in the test, never narrated).
-    # NEW: BPE APPLY certificate — the corpus encoded under the
-    # TRAINED merge table vs the fixed regex baseline, closing the
-    # text family's training loop the way the r10 retrain
-    # certificates closed IVF/PQ (VERDICT r10 next-round #2)
-    "t_bpe_apply",
-    # NEW: streaming multimodal dataset card — foreachBatch merge into
-    # PK-keyed digest-registry + byte-bucket partials, the family's
-    # seventh proven restart state class (VERDICT r10 next-round #3)
-    "s_stream_mm_card",
-    # ORACLE-changed: the unrolled-CTE chain is now MATERIALIZED —
-    # DuckDB 1.0 inlines un-hinted CTEs and re-evaluated the chain
-    # exponentially (5.8 s → 0.1 s at sf0.01; same rows, proven by an
-    # equality run). The Spark side is untouched.
-    "t_bpe_train",
-    # NEW: k-map re-identification audit — released sample's QI
-    # classes sized against the full population registry, completing
-    # the privacy audit ladder (k-anonymity → l-diversity →
-    # t-closeness → k-map)
-    "a_k_map",
-    # NEW: IVF probe-sweep tuning curve — recall vs corpus-scan share
-    # for p = 1..8 probes, the dedup_banding_curve pattern applied to
-    # the ANN serving dial (N_PROBES)
-    "sim_ivf_probe_curve",
+_NEW_OR_CHANGED: tuple[str, ...] = (
+    # a query joins when a round adds or changes it, and leaves once
+    # it has a green driver row
 )
 
 #: hard cap on the hand-maintained head (VERDICT r7 item 1) — enforced

@@ -23,10 +23,11 @@ The standard curation stages of a large-scale training-data pipeline
   first ``K`` vectors), a fixed iteration count, and 6-dp rounding of
   centroids/distances so Spark and the SQL oracle agree bit-for-bit.
   Idiomatic Spark k-means: centroids live on the driver (k×d doubles),
-  each iteration is ONE linear scan + a k-group element-wise average;
-  the assignment kernel is an Arrow-vectorized pandas UDF (numpy
-  batch×k×d broadcast), the blessed shape for custom numeric ops
-  that Catalyst's built-ins can't express efficiently.
+  each iteration is ONE linear scan + a (k, dim) DECIMAL mean (the
+  shared ``similarity._lloyd`` loop); the assignment kernel is an
+  Arrow-vectorized pandas UDF (numpy batch×k×d broadcast), the
+  blessed shape for custom numeric ops that Catalyst's built-ins
+  can't express efficiently.
 
 The reference has no curation surface (it is a securities ETL —
 SURVEY §2.10); these extend the engine per the north star. Quality
@@ -56,7 +57,12 @@ from securities_data_pipeline_spark.operators.textops import (
     round6_ratio,
     words_col,
 )
-from securities_data_pipeline_spark.sources.tables import spread, table
+from securities_data_pipeline_spark.sources.tables import (
+    materialize,
+    materialize_eager,
+    spread,
+    table,
+)
 
 # ---------------------------------------------------------------------------
 # repetition filter (Gopher-style duplicate-text heuristics)
@@ -422,11 +428,12 @@ def _assign(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
 
 
 def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd's loop → final assignment WITH the vectors:
-    (vec_id, v, cid). Shared by the plain assignment query and
-    SemDeDup (which needs the vectors for within-cluster cosine
-    without re-joining the corpus to itself on vec_id)."""
-    from securities_data_pipeline_spark.operators.similarity import emb_table
+    """Lloyd's loop (the shared ``_lloyd``, NumPy L2 ``_assign`` as
+    E-step) → final assignment WITH the vectors: (vec_id, v, cid).
+    Shared by the plain assignment query and SemDeDup (which needs the
+    vectors for within-cluster cosine without re-joining the corpus to
+    itself on vec_id)."""
+    from securities_data_pipeline_spark.operators.similarity import _lloyd, emb_table
 
     emb = (
         emb_table(spark, sf_dir)
@@ -434,32 +441,17 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
         )
-        .localCheckpoint()  # iterated over ITERS+1 times — scan parquet once
+        .transform(materialize_eager)  # iterated ITERS+1 times — scan once
     )
-    cents = [
-        (int(r["vec_id"]), list(r["v"]))
-        for r in emb.where(F.col("vec_id") < KMEANS_K).collect()
-    ]
-    cents.sort(key=lambda t: t[0])
-    for _ in range(KMEANS_ITERS):
-        assigned = _assign(emb, cents)
-        # one F.expr per mean instead of four py4j builder calls each
-        # (~200ms of driver build per iteration at d=64; optimization
-        # round 11) — the SQL is term-for-term the previous Column form
-        rows = (
-            assigned.groupBy("cid")
-            .agg(
-                *[
-                    F.expr(f"round(avg(element_at(v, {i + 1})), 6) AS m{i}")
-                    for i in range(KMEANS_DIM)
-                ]
-            )
-            .collect()
-        )
-        cents = sorted(
-            (int(r["cid"]), [r[f"m{i}"] for i in range(KMEANS_DIM)]) for r in rows
-        )
-    return _assign(emb, cents)
+    seeds = emb.where(F.col("vec_id") < KMEANS_K).collect()
+    cents = _lloyd(
+        dict(sorted((int(r["vec_id"]), list(r["v"])) for r in seeds)),
+        lambda state: _assign(emb, list(state.items())),
+        ["cid"],
+        "v",
+        KMEANS_ITERS,
+    )
+    return _assign(emb, list(cents.items()))
 
 
 def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,13 +459,14 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 8 vectors, 2 centroid updates, final assignment returned as
     (vec_id, cluster).
 
-    Per iteration: ONE linear scan computes assignments, then a
-    K-group element-wise mean (64 ``avg`` columns) collects k×d
-    doubles to the driver — the classic Spark k-means loop (MLlib's
-    shape). Centroids re-enter the plan as broadcast literals, so no
-    join and no shuffle beyond the k-group aggregate's partial
-    combine. Centroid means round to 6 dp each update to keep both
-    engines' float paths aligned.
+    Per iteration (``similarity._lloyd``): ONE linear scan computes
+    assignments, then a (cluster, dim) mean in exact DECIMAL(27,10)
+    sums collects k×d doubles to the driver — the classic Spark k-means
+    loop (MLlib's shape); a cluster that loses every member keeps its
+    previous centroid. Centroids re-enter the plan as UDF closure
+    state, so no join and no shuffle beyond the aggregate's partial
+    combine. Decimal sums are associative and the means round to 6 dp,
+    so centroids are bit-stable across partitionings and engines.
     """
     return _kmeans_assigned(spark, sf_dir).select(
         "vec_id", F.col("cid").alias("cluster")
@@ -505,11 +498,16 @@ def _sql_kmeans(k: int = KMEANS_K, d: int = KMEANS_DIM, iters: int = KMEANS_ITER
     FROM emb e CROSS JOIN c{it} c
   ) ranked WHERE rn = 1
 ), m{it} AS (
-  SELECT cid, i, round(avg(v[i]), 6) AS m
+  SELECT cid, i,
+         round(CAST(SUM(CAST(v[i] AS DECIMAL(27,10))) AS DOUBLE)
+               / COUNT(*), 6) AS m
   FROM a{it} CROSS JOIN range(1, {d + 1}) t(i)
   GROUP BY cid, i
-), c{it + 1} AS (
+), n{it} AS (
   SELECT cid, list(m ORDER BY i) AS cv FROM m{it} GROUP BY cid
+), c{it + 1} AS (
+  SELECT c.cid, COALESCE(n.cv, c.cv) AS cv
+  FROM c{it} c LEFT JOIN n{it} n USING (cid)
 )"""
         )
     parts.append(
@@ -726,15 +724,14 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster id; keep-lowest-id resolution is the repo-wide dedup
     convention (`dedup_resolve`).
     """
-    from securities_data_pipeline_spark.operators.similarity import cosine, spread
+    from securities_data_pipeline_spark.operators.similarity import cosine
 
-    # spread AFTER the Lloyd loop (its 1-partition float avg order is
-    # part of the oracle contract) but BEFORE the checkpoint, so the
-    # within-cluster pair join — Σ|cluster|² interpreted cosines, the
-    # operator's real cost — fans out over every core instead of the
-    # single input partition a small corpus file arrives in. Same-
-    # session A/B at sf0.1: 7.46 → 2.84 s median-of-3, identical rows.
-    assigned = spread(_kmeans_assigned(spark, sf_dir)).localCheckpoint(eager=False)
+    # spread BEFORE the checkpoint, so the within-cluster pair join —
+    # Σ|cluster|² interpreted cosines, the operator's real cost — fans
+    # out over every core instead of the single input partition a
+    # small corpus file arrives in. Same-session A/B at sf0.1:
+    # 7.46 → 2.84 s median-of-3, identical rows.
+    assigned = spread(_kmeans_assigned(spark, sf_dir)).transform(materialize)
     a = assigned.select(
         F.col("vec_id").alias("va"), F.col("v").alias("xa"), F.col("cid").alias("ca")
     )
@@ -1283,11 +1280,9 @@ def dedup_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from securities_data_pipeline_spark.operators.similarity import cosine, spread
+    from securities_data_pipeline_spark.operators.similarity import cosine
 
-    assigned = spread(_kmeans_assigned(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    assigned = spread(_kmeans_assigned(spark, sf_dir)).transform(materialize)
     wc = Window.partitionBy("cid").orderBy("vec_id")
     anchors = (
         assigned.withColumn("rk", F.row_number().over(wc))

@@ -322,15 +322,16 @@ def assign_buckets(emb: DataFrame) -> DataFrame:
     Optimization round 11: the original formulation exploded the corpus
     n×K through a centroid crossJoin and picked row 1 of a per-vector
     window — one full n×K Exchange + sort per consumer. The E-step here
-    is now the same IN-ROW argmax fold ``_kmeans_assign`` uses (guide
-    §2.4 — remove shuffles outright): the K-row roster packs into one
-    sorted struct row, broadcasts, and every vector folds over it
-    inside a single projection — ZERO Window nodes, zero n×K rows.
-    Tie semantics are identical by construction (strictly-greater fold
-    over the centroid_id-ascending array ≡ ORDER BY csim DESC,
-    centroid_id ASC row 1), and the cosine expression is the same
-    rounded fold, so the assignment is bit-identical — the equivalence
-    the sim_kmeans_train pure-Python pin already proves for this shape.
+    is now the IN-ROW argmax fold (``_argmax_fold_sql``, via
+    ``_kmeans_assign``; guide §2.4 — remove shuffles outright): the
+    K-row roster packs into one sorted struct row, broadcasts, and
+    every vector folds over it inside a single projection — ZERO
+    Window nodes, zero n×K rows. Tie semantics are identical by
+    construction (strictly-greater fold over the centroid_id-ascending
+    array ≡ ORDER BY csim DESC, centroid_id ASC row 1), and it is the
+    same rounded cosine fold the trainers run over their literal
+    roster, so the assignment is bit-identical — the equivalence the
+    sim_kmeans_train pure-Python pin proves for this fold.
     """
     centroids = emb.where(_centroid_filter()).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
@@ -1883,6 +1884,33 @@ def _kmeans_roster(cents: DataFrame):
     )
 
 
+def _argmax_fold_sql(roster: str) -> str:
+    """THE cosine in-row argmax fold, as one SQL string over ``roster``
+    — an SQL expression for the id-ascending array of
+    (centroid_id, cn, cvec) structs: the broadcast ``cents`` column of
+    ``_kmeans_assign`` or the literal ``array(...)`` of
+    ``_roster_fold_sql``. The row needs ``embedding`` and its hoisted
+    norm ``_en``. Per centroid: sim = round(dot / (cn * _en), 6), the
+    dot the same left-to-right ``aggregate`` fold ``cosine`` runs;
+    the first strictly-greater sim wins, so ties keep the lowest id
+    (≡ ``ORDER BY sim DESC, centroid_id ASC`` row 1). One parsed
+    string, not a Column tree: py4j-built nested lambdas get fresh
+    variable names per build, defeating the whole-stage-codegen cache
+    on every assign consumer (see ``_dot_expr``)."""
+    dot = (
+        "aggregate(zip_with(c.cvec, embedding, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v)"
+    )
+    sim = f"round({dot} / (c.cn * _en), 6)"
+    return (
+        f"aggregate({roster}, "
+        "named_struct('sim', CAST(-2.0 AS DOUBLE), 'cid', CAST(-1 AS BIGINT)), "
+        f"(acc, c) -> IF({sim} > acc.sim, "
+        f"named_struct('sim', {sim}, 'cid', CAST(c.centroid_id AS BIGINT)), acc))"
+    )
+
+
 def _kmeans_assign(emb: DataFrame, roster) -> DataFrame:
     """E-step as an IN-ROW argmax: every vector scans the broadcast
     roster array inside one ``F.aggregate`` — no n×K row explosion and
@@ -1899,25 +1927,7 @@ def _kmeans_assign(emb: DataFrame, roster) -> DataFrame:
     grouped exactly as ``cosine`` groups it (dot / (norm_a * norm_b)),
     so every sim is bit-identical. Extra input columns (label, …) pass
     through untouched."""
-    # the whole argmax fold as ONE SQL string (optimization round 11):
-    # py4j-built nested lambdas get fresh variable names per build,
-    # defeating the whole-stage-codegen cache on every assign consumer
-    # (see _dot_expr). Term-for-term the previous Column form: -2.0/-1
-    # init struct, per-centroid sim = round(dot / (cn * _en), 6) with
-    # the same zip_with/fold shape, strictly-greater keeps the first
-    # (lowest-id) winner.
-    s = (
-        "round(aggregate(zip_with(c.cvec, embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v) / (c.cn * _en), 6)"
-    )
-    best = F.expr(
-        "aggregate(cents, "
-        "named_struct('sim', CAST(-2.0 AS DOUBLE), 'cid', CAST(-1 AS BIGINT)), "
-        f"(acc, c) -> CASE WHEN {s} > acc.sim "
-        f"THEN named_struct('sim', {s}, 'cid', CAST(c.centroid_id AS BIGINT)) "
-        "ELSE acc END)"
-    )
+    best = F.expr(_argmax_fold_sql("cents"))
     cols = list(emb.columns)
     # two-step projection: the fold lands in ONE alias first, fields
     # extract in a second Project — multi-use non-trivial aliases block
@@ -1961,11 +1971,10 @@ def _roster_fold_sql(roster: list[tuple[int, list[float]]]) -> str:
     """The in-row argmax fold over a LITERAL roster — the bounded k×d
     training state entering the plan as array literals (the
     hyperplane/ADC lesson: built as ONE SQL string parsed JVM-side, so
-    driver time never scales with K×d py4j round-trips). Expression
-    semantics are exactly ``_kmeans_assign``'s fold: dot and norm are
-    the same left-to-right ``aggregate`` folds, ``cn`` is the Python
-    left-fold norm (bit-identical to ``_norm`` — ``_py_norm``), ties
-    keep the first strictly-greater sim over the id-ascending array.
+    driver time never scales with K×d py4j round-trips). The fold is
+    ``_argmax_fold_sql``, the same one ``_kmeans_assign`` runs; ``cn``
+    is the Python left-fold norm (bit-identical to ``_norm`` —
+    ``_py_norm``).
 
     Optimization round 12 kept the LITERAL form deliberately: the
     1-row-broadcast-LocalRelation binding VERDICT r11 #2 suggested
@@ -1984,18 +1993,7 @@ def _roster_fold_sql(roster: list[tuple[int, list[float]]]) -> str:
         )
         for cid, vec in roster
     )
-    dot = (
-        "aggregate(zip_with(c.cvec, embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v)"
-    )
-    sim = f"round({dot} / (c.cn * _en), 6)"
-    return (
-        f"aggregate(array({entries}), "
-        "named_struct('sim', CAST(-2.0 AS DOUBLE), 'cid', CAST(-1 AS BIGINT)), "
-        f"(acc, c) -> IF({sim} > acc.sim, "
-        f"named_struct('sim', {sim}, 'cid', c.centroid_id), acc))"
-    )
+    return _argmax_fold_sql(f"array({entries})")
 
 
 _EN_SQL = (
@@ -2035,16 +2033,16 @@ def kmeans_train_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls for, seeded from the serving roster it would replace (the
     deterministic ``_centroid_filter`` centroids sim_ivf_topk probes).
 
-    Per round: E-step = in-row argmax against the one-row broadcast
-    roster (``_kmeans_assign``); M-step = per-cluster per-dimension
-    mean in exact DECIMAL(27,10) sums (the ``label_centroids``
-    discipline — float groupBy sums are accumulation-order-
-    nondeterministic, decimal sums are associative, so centroids are
-    bit-stable across partitionings AND engines), reassembled into an
-    ordered array; a cluster that loses every member keeps its
-    previous centroid (left-join fallback on the K-row roster). Round
-    state localCheckpoints lazily so round r+1 never replans rounds
-    1..r (the t_bpe_train / logreg-GD unrolling lesson). Output: the
+    Per round (``_lloyd``): E-step = in-row argmax against the
+    literal roster (``_assign_literal``); M-step = per-cluster
+    per-dimension mean in exact DECIMAL(27,10) sums (the
+    ``label_centroids`` discipline — float groupBy sums are
+    accumulation-order-nondeterministic, decimal sums are associative,
+    so centroids are bit-stable across partitionings AND engines),
+    collected to the driver; a cluster that loses every member keeps
+    its previous centroid. Round state lives on the driver, so round
+    r+1 never replans rounds 1..r (the t_bpe_train / logreg-GD
+    unrolling lesson). Output: the
     trained roster after ``KMEANS_ROUNDS`` rounds with each cluster's
     final membership and mean cosine cohesion (clusters empty under
     the FINAL roster are dropped by the inner stats join, on both
@@ -2084,61 +2082,69 @@ def kmeans_train_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_train_lists(emb: DataFrame) -> list[tuple[int, list[float]]]:
-    """The Lloyd loop itself: ``KMEANS_ROUNDS`` rounds of in-row-argmax
-    E-step + DECIMAL M-step over the gated corpus ``emb``, returning
-    the FULL trained roster (all K rows, empty clusters kept at their
-    previous centroid) as driver-side state — shared by
-    ``kmeans_train_roster`` (which joins final membership stats) and
-    ``sim_ivf_retrain_recall`` (which needs every centroid as a probe
-    target, member or not).
+def _lloyd(
+    state: dict,
+    assign: Callable[[dict], DataFrame],
+    keys: list[str],
+    vec: str,
+    rounds: int,
+) -> dict:
+    """THE Lloyd loop, shared by every k-means trainer in the package
+    (curation's ``_kmeans_assigned``, ``_kmeans_train_lists``,
+    ``_pq_train_state``). ``state`` maps a cluster key — one id, or a
+    tuple in ``keys`` order — to its vector, in the order the E-step
+    wants; ``assign(state)`` is the E-step kernel and returns a frame
+    with the ``keys`` columns and the member vector column ``vec``.
 
-    Optimization round 11: the round state (k×d ≤ 20×64 doubles —
-    index-sized forever) now lives on the DRIVER between rounds, the
-    same bounded class as ``_pq_codebook``'s donor collect and MLlib
-    KMeans' per-iteration centroid collect. Each round is ONE job:
-    scan → literal-roster argmax map → posexplode → map-side-combined
-    (centroid, dim) DECIMAL mean → collect K×d rows; the driver merges
-    means with the empty-cluster fallback and embeds the next round's
-    roster as literals. vs the previous formulation (per-round roster
-    re-aggregation + 1-row crossJoin + left-join fallback + lazy
-    localCheckpoint), this removes 2 shuffles + 1 broadcast + 1 join
-    per round AND — the measured driver killer — the per-checkpoint
-    Catalyst replanning of the growing tree (profiled 17.6 s of
-    DataFrame BUILD time alone for the 3-round chain at sf0.1; guide
-    §7.3's planning-cost class). Collected means round-trip exactly
-    (IEEE doubles both ways), the M-step expression is unchanged, and
-    the fold compares the same rounded sims, so the trained roster is
-    bit-identical — pinned by the pure-Python Lloyd twin test.
-    """
-    cents = _collect_centroid_rows(emb)
-    for _ in range(KMEANS_ROUNDS):
-        assigned = _assign_literal(emb, cents)
-        dims = assigned.select(
-            "centroid_id", F.posexplode("embedding").alias("pos", "x")
-        )
-        means = dims.groupBy("centroid_id", "pos").agg(
+    Each round is ONE job: E-step map → posexplode → map-side-combined
+    (keys, dim) mean in exact DECIMAL(27,10) sums (the
+    ``label_centroids`` discipline: decimal sums are associative, so
+    the means are bit-stable across partitionings AND engines) →
+    collect the means. The driver merges them into the next state; a
+    cluster that loses every member keeps its previous vector. State is
+    driver-side k×d doubles — index-sized forever, the MLlib KMeans
+    per-iteration collect class — so no round replans its predecessors
+    (guide §7.3's planning-cost class). Collected means round-trip
+    exactly (IEEE doubles both ways)."""
+    for _ in range(rounds):
+        dims = assign(state).select(*keys, F.posexplode(vec).alias("pos", "x"))
+        means = dims.groupBy(*keys, "pos").agg(
             F.round(
-                F.sum(
-                    F.col("x").cast("double").cast("decimal(27,10)")
-                ).cast("double")
+                F.sum(F.col("x").cast("double").cast("decimal(27,10)")).cast(
+                    "double"
+                )
                 / F.count(F.lit(1)),
                 6,
-            ).alias("m")
+            ).alias("mean")
         ).collect()
-        bypos: dict[int, dict[int, float]] = {}
+        bypos: dict = {}
         for r in means:
-            bypos.setdefault(int(r.centroid_id), {})[int(r.pos)] = float(r.m)
-        cents = [
-            (
-                cid,
-                [bypos[cid][p] for p in range(len(prev))]
-                if cid in bypos
-                else prev,
-            )
-            for cid, prev in cents
-        ]
-    return cents
+            key = r[0] if len(keys) == 1 else tuple(r[: len(keys)])
+            bypos.setdefault(key, {})[r["pos"]] = r["mean"]
+        state = {
+            key: [bypos[key][p] for p in range(len(prev))] if key in bypos else prev
+            for key, prev in state.items()
+        }
+    return state
+
+
+def _kmeans_train_lists(emb: DataFrame) -> list[tuple[int, list[float]]]:
+    """``KMEANS_ROUNDS`` rounds of ``_lloyd`` over the gated corpus
+    ``emb`` — literal-roster cosine argmax E-step (``_assign_literal``),
+    seeded from the serving roster — returning the FULL trained roster
+    (all K rows, id-ascending, empty clusters kept at their previous
+    centroid) as driver-side state. Shared by ``kmeans_train_roster``
+    (which joins final membership stats) and ``sim_ivf_retrain_recall``
+    (which needs every centroid as a probe target, member or not).
+    Pinned bit-for-bit by the pure-Python Lloyd twin test."""
+    cents = _lloyd(
+        dict(_collect_centroid_rows(emb)),
+        lambda roster: _assign_literal(emb, list(roster.items())),
+        ["centroid_id"],
+        "embedding",
+        KMEANS_ROUNDS,
+    )
+    return list(cents.items())
 
 
 def sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2372,7 +2378,7 @@ def sim_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously each re-scanned parquet single-task) and the exact
     side computes ONCE (localCheckpoint) feeding both rosters' hit
     joins; per roster the corpus is touched by one in-row-argmax map
-    (``_kmeans_assign`` — no n×K explosion, checkpointed because the
+    (``_assign_literal`` — no n×K explosion, checkpointed because the
     bucket aggregate and the probe join both consume it) plus one
     bucket aggregate, and the probe/rank stage is the ``sim_ivf_topk``
     shape over probed buckets only. All crossJoins are 1-row stats or
@@ -2510,13 +2516,12 @@ def pq_train_codebook(
     subspace at once, the offline step the serving codebook
     (``_pq_codebook``'s normalized donor stand-in) approximates. Jégou
     et al.'s product quantizer trains M independent K-word codebooks
-    on the M subvector projections; here that is ONE plan: subvector
-    rows key on (vec_id, m), the per-m rosters pack into M rows of
-    K×dsub state that join back by subspace id (a broadcast equi-join,
-    not a crossJoin — the roster table has PQ_M rows), and the E-step
-    is the same in-row argmin fold as ``sim_kmeans_train`` (first
-    strictly-smaller distance over the c-ascending roster ≡ ORDER BY
-    dist ASC, c ASC). M-step means are exact DECIMAL(27,10) sums per
+    on the M subvector projections; here that is ONE loop
+    (``_lloyd`` keyed on (m, c)): subvector rows key on (vec_id, m),
+    and the E-step is an in-row L2 argmin over the row's subspace of
+    the literal codebook (``_pq_cb_fold_sql``: first strictly-smaller
+    distance over the c-ascending codewords ≡ ORDER BY dist ASC,
+    c ASC). M-step means are exact DECIMAL(27,10) sums per
     (m, c, dim); a codeword that loses every member keeps its previous
     value. Output: the trained codebooks with final per-code
     membership and mean squared L2 distortion — the artifact +
@@ -2607,21 +2612,17 @@ def _pq_train_state(
     emb: DataFrame | None = None,
     donors: list[list[float]] | None = None,
 ) -> tuple[dict[tuple[int, int], list[float]], DataFrame]:
-    """The subspace-Lloyd loop with DRIVER-side codebook state
-    (M×K×dsub doubles — index-sized forever, the ``_pq_codebook``
-    bounded class): per round ONE job — subvector scan → literal
-    argmin map → map-side-combined (m, c, dim) DECIMAL mean → collect
-    M×K×dsub rows — and the driver merges means with the empty-code
-    fallback. Returns (trained codebook dict, the lazily-checkpointed
-    subvector table for downstream passes). Replaces the per-round
-    roster re-aggregation + broadcast join + lazy localCheckpoint
-    whose repeated Catalyst replanning dominated the wall clock
-    (profiled 7.6-23.9 s of DataFrame build time; guide §7.3).
-    Donor init collects the same gap-tolerant donor selection and
-    normalizes via ``_l2_normalize`` (bit-identical to the in-plan
-    ``NV_EXPR`` — the documented shared-fold contract), so cb0 and
-    every trained value match the previous formulation bit-for-bit —
-    pinned by the pure-Python product-quantizer twin test."""
+    """The subspace-Lloyd trainer: ``PQ_TRAIN_ROUNDS`` rounds of
+    ``_lloyd`` keyed on (m, c), with the per-subspace L2 argmin over
+    the literal codebook (``_pq_assign_literal``) as E-step and
+    DRIVER-side codebook state (M×K×dsub doubles — index-sized
+    forever, the ``_pq_codebook`` bounded class). Returns (trained
+    codebook dict, the lazily-checkpointed subvector table for
+    downstream passes). Donor init collects the same gap-tolerant
+    donor selection and normalizes via ``_l2_normalize``
+    (bit-identical to the in-plan ``NV_EXPR`` — the documented
+    shared-fold contract) — pinned with every trained value by the
+    pure-Python product-quantizer twin test."""
     if emb is None:
         emb = emb_table(spark, sf_dir)
     norme = spread(emb).select("vec_id", F.expr(NV_EXPR).alias("nv"))
@@ -2661,31 +2662,13 @@ def _pq_train_state(
         for m in range(PQ_M):
             cb[(m, c)] = nv[m * PQ_DSUB : (m + 1) * PQ_DSUB]
 
-    for _ in range(PQ_TRAIN_ROUNDS):
-        assigned = _pq_assign_literal(sub, cb)
-        dims = assigned.select(
-            "m", "c", F.posexplode("sv").alias("pos", "x")
-        )
-        means = dims.groupBy("m", "c", "pos").agg(
-            F.round(
-                F.sum(F.col("x").cast("decimal(27,10)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("v")
-        ).collect()
-        bypos: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            bypos.setdefault((int(r.m), int(r.c)), {})[int(r.pos)] = float(
-                r.v
-            )
-        cb = {
-            (m, c): (
-                [bypos[(m, c)][p] for p in range(len(prev))]
-                if (m, c) in bypos
-                else prev
-            )
-            for (m, c), prev in cb.items()
-        }
+    cb = _lloyd(
+        cb,
+        lambda state: _pq_assign_literal(sub, state),
+        ["m", "c"],
+        "sv",
+        PQ_TRAIN_ROUNDS,
+    )
     return cb, sub
 
 

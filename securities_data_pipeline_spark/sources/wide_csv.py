@@ -60,12 +60,17 @@ def read_wide_price_csv(
         + [T.StructField(n, T.DoubleType(), True) for n in names[1:]]
     )
     raw = spark.read.csv(path, schema=schema, header=False, mode="PERMISSIVE")
-    for n in names[1:]:
-        if n.startswith("Volume_"):
-            # backtick-quote: real tickers contain dots (BRK.B, BF.B),
-            # and a bare F.col("Volume_BRK.B") parses the dot as struct
-            # access and fails resolution
-            raw = raw.withColumn(n, F.col(f"`{n}`").cast(T.LongType()))
+    # ONE projection for every cast: a withColumn per column re-analyses
+    # the whole plan each call, quadratic in the ticker count. Backtick-
+    # quote: real tickers contain dots (BRK.B, BF.B), and a bare
+    # F.col("Volume_BRK.B") parses the dot as struct access and fails
+    raw = raw.withColumns(
+        {
+            n: F.col(f"`{n}`").cast(T.LongType())
+            for n in names[1:]
+            if n.startswith("Volume_")
+        }
+    )
     # try_to_timestamp: header rows yield NULL instead of an ANSI cast
     # error, and get filtered out
     ts = F.try_to_timestamp(F.col(date_col))

@@ -951,6 +951,62 @@ def test_kmeans_train_matches_pure_python_lloyd(spark):
     assert flat == expected_flat
 
 
+def test_lloyd_keeps_emptied_cluster_at_previous_vector(spark):
+    """The shared Lloyd loop on tiny frames where one seed loses every
+    member in round 1: that cluster keeps its previous vector through
+    every round while the others move to their DECIMAL means, and the
+    state keeps its key order — for both key shapes the trainers use
+    (``centroid_id``; ``(m, c)``)."""
+    from securities_data_pipeline_spark.operators.similarity import (
+        PQ_M,
+        _assign_literal,
+        _lloyd,
+        _pq_assign_literal,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [0.9, 0.0]), (3, [0.0, 1.0]), (4, [0.1, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    # seed 2 points away from every vector: no cosine argmax picks it
+    seeds = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [-1.0, -1.0]}
+    got = _lloyd(
+        seeds,
+        lambda roster: _assign_literal(emb, list(roster.items())),
+        ["centroid_id"],
+        "embedding",
+        2,
+    )
+    assert list(got.items()) == [
+        (0, [0.95, 0.05]),
+        (1, [0.05, 0.9]),
+        (2, [-1.0, -1.0]),
+    ]
+
+    # subvectors in subspaces 0 and 1 only: codeword 2 is far from all
+    # of them, and every codeword of subspaces 2.. has no rows at all
+    sub = spark.createDataFrame(
+        [
+            (v, m, [x])
+            for m in (0, 1)
+            for v, x in enumerate([0.0, 1.0, 10.0, 11.0])
+        ],
+        "vec_id long, m int, sv array<double>",
+    )
+    cb = {(m, c): [w] for m in range(PQ_M) for c, w in enumerate([0.0, 10.0, 100.0])}
+    got = _lloyd(
+        cb,
+        lambda state: _pq_assign_literal(sub, state),
+        ["m", "c"],
+        "sv",
+        2,
+    )
+    expected = dict(cb)
+    for m in (0, 1):
+        expected[(m, 0)], expected[(m, 1)] = [0.5], [10.5]
+    assert list(got.items()) == list(expected.items())
+
+
 def test_kmeans_train_covers_gated_corpus(spark):
     """Every admitted vector is assigned exactly once under the final
     roster: membership sums to the gated corpus size, and cohesion is

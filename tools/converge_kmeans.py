@@ -1,7 +1,8 @@
 """Rounds-to-convergence for sim_kmeans_train (SCALE.md, VERDICT r8
 item 5): per Lloyd round, the assignment CHURN — the fraction of
 vectors whose nearest-centroid changed versus the previous round — at
-1x (sf0.1) and at an amplified factor, plus wall time per round. Churn
+1x (sf0.1) and at an amplified factor, plus wall time per round of the
+shipped trainer (``_lloyd`` with the ``_assign_literal`` E-step). Churn
 hitting ~0 is the convergence signal; the point of the measurement is
 that the ROUND COUNT, not the per-round cost, is what scale does not
 change (each round stays one map + one bounded aggregate).
@@ -23,24 +24,29 @@ def churn_per_round(spark, sf_dir: str, max_rounds: int) -> list[dict]:
     from pyspark.sql import functions as F
 
     from securities_data_pipeline_spark.operators.similarity import (
-        _centroid_filter,
-        _kmeans_assign,
-        _kmeans_roster,
+        _assign_literal,
+        _collect_centroid_rows,
+        _lloyd,
         emb_table,
     )
-
-    emb = emb_table(spark, sf_dir).localCheckpoint()
-    cents = emb.where(_centroid_filter()).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    from securities_data_pipeline_spark.sources.tables import (
+        materialize_eager,
+        spread,
     )
+
+    # the corpus and seeding of kmeans_train_roster
+    emb = spread(emb_table(spark, sf_dir)).transform(materialize_eager)
     n = emb.count()
+    cents = dict(_collect_centroid_rows(emb))
+
+    def assign(roster):
+        return _assign_literal(emb, list(roster.items()))
+
     prev = None
     out = []
     for rnd in range(1, max_rounds + 1):
-        t0 = time.time()
-        assigned = _kmeans_assign(emb, _kmeans_roster(cents)).select(
-            "vec_id", "centroid_id"
-        ).localCheckpoint()
+        # churn: this round's E-step against the previous round's
+        assigned = assign(cents).select("vec_id", "centroid_id").localCheckpoint()
         if prev is None:
             changed = n  # round 1: everything is newly assigned
         else:
@@ -50,33 +56,9 @@ def churn_per_round(spark, sf_dir: str, max_rounds: int) -> list[dict]:
                 .where(F.col("a.centroid_id") != F.col("p.centroid_id"))
                 .count()
             )
-        # M-step (same shape as the operator)
-        dims = _kmeans_assign(emb, _kmeans_roster(cents)).select(
-            "centroid_id", F.posexplode("embedding").alias("pos", "x")
-        )
-        means = dims.groupBy("centroid_id", "pos").agg(
-            F.round(
-                F.sum(F.col("x").cast("double").cast("decimal(27,10)")).cast(
-                    "double"
-                )
-                / F.count(F.lit(1)),
-                6,
-            ).alias("m")
-        )
-        newc = (
-            means.groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "centroid_id",
-                F.transform(F.col("pm"), lambda s: s["m"]).alias("cvec"),
-            )
-        )
-        cents = (
-            cents.select("centroid_id", F.col("cvec").alias("prev"))
-            .join(newc, "centroid_id", "left")
-            .select("centroid_id", F.coalesce("cvec", "prev").alias("cvec"))
-            .localCheckpoint()
-        )
+        # one round of the shipped trainer, timed alone
+        t0 = time.time()
+        cents = _lloyd(cents, assign, ["centroid_id"], "embedding", 1)
         out.append(
             {
                 "round": rnd,
