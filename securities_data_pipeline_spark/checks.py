@@ -10,15 +10,19 @@ One mechanism covering both of the reference's validation layers:
   (dw_transformer/models/properties.yml:10-52,96-170), which dbt
   compiles to SQL and runs **in production on every pipeline run**.
 
-Every check compiles to a single aggregate or anti-join over the
-DataFrame — no collect of data rows, only violation counts (plus a
-bounded sample for diagnostics), so the framework is safe to run on
-100 TB tables: one pass, map-side combines, tiny driver results.
+Every check compiles to a filter, aggregate or anti-join over the
+DataFrame and runs nothing when called: it records its violating-rows
+frame and a bounded sample projection. ``run_checks`` counts a whole
+suite in one action (a union of the violating frames tagged by check,
+grouped and counted), then fetches samples only for the checks that
+failed. No data rows reach the driver beyond those samples, so the
+framework is safe to run on 100 TB tables, and a suite over the same
+star schema plans and scans it once instead of twice per check.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,12 +38,39 @@ class SchemaErrors(Exception):
         super().__init__("; ".join(errors))
 
 
-@dataclass
 class CheckResult:
-    name: str
-    passed: bool
-    violations: int
-    sample: list = field(default_factory=list)
+    """One check's outcome. Built lazily: the check records its
+    violating-rows frame and its sample frame, and ``violations`` /
+    ``sample`` are computed on first read — by that read alone, or for
+    a whole suite at once by ``run_checks``. Once the sample is read,
+    the frames are dropped and the result no longer depends on its
+    input."""
+
+    def __init__(self, name: str, bad: DataFrame, sample: DataFrame):
+        self.name = name
+        self._bad, self._sample_df = bad, sample
+        self._violations: int | None = None
+        self._sample: list | None = None
+
+    @property
+    def violations(self) -> int:
+        if self._violations is None:
+            self._violations = self._bad.count()
+        return self._violations
+
+    @property
+    def passed(self) -> bool:
+        return self.violations == 0
+
+    @property
+    def sample(self) -> list:
+        if self._sample is None:
+            self._sample = self._sample_df.collect() if self.violations else []
+            self._bad = self._sample_df = None
+        return self._sample
+
+    def __repr__(self) -> str:
+        return f"CheckResult({self.name!r}, violations={self._violations})"
 
 
 # ---------------------------------------------------------------------------
@@ -103,18 +134,14 @@ def check_not_null(df: DataFrame, column: str, sample: int = 5) -> CheckResult:
     offending ROWS (the null column itself is uninformative) so the
     diagnostic identifies which records broke the constraint."""
     bad = df.where(F.col(column).isNull())
-    rows = bad.limit(sample).collect()
-    n = bad.count()
-    return CheckResult(f"not_null({column})", n == 0, n, rows)
+    return CheckResult(f"not_null({column})", bad, bad.limit(sample))
 
 
 def check_unique(df: DataFrame, columns: str | list[str], sample: int = 5) -> CheckResult:
     """dbt ``unique`` (properties.yml:11-21): group by key, count>1."""
     cols = [columns] if isinstance(columns, str) else list(columns)
     dupes = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1)
-    rows = dupes.limit(sample).collect()
-    n = dupes.count()
-    return CheckResult(f"unique({','.join(cols)})", n == 0, n, rows)
+    return CheckResult(f"unique({','.join(cols)})", dupes, dupes.limit(sample))
 
 
 def check_accepted_values(
@@ -122,9 +149,9 @@ def check_accepted_values(
 ) -> CheckResult:
     """dbt ``accepted_values`` (properties.yml:117-142)."""
     bad = df.where(~F.col(column).isin(values) | F.col(column).isNull())
-    rows = bad.select(column).distinct().limit(sample).collect()
-    n = bad.count()
-    return CheckResult(f"accepted_values({column})", n == 0, n, rows)
+    return CheckResult(
+        f"accepted_values({column})", bad, bad.select(column).distinct().limit(sample)
+    )
 
 
 def check_relationships(
@@ -137,9 +164,9 @@ def check_relationships(
     orphans = child.select(F.col(child_key).alias("k")).where(F.col("k").isNotNull()).join(
         parent.select(F.col(parent_key).alias("k")).distinct(), "k", "left_anti"
     )
-    rows = orphans.distinct().limit(sample).collect()
-    n = orphans.count()
-    return CheckResult(f"relationships({child_key}->{parent_key})", n == 0, n, rows)
+    return CheckResult(
+        f"relationships({child_key}->{parent_key})", orphans, orphans.distinct().limit(sample)
+    )
 
 
 def quarantine_split(
@@ -172,7 +199,26 @@ def quarantine_split(
 
 def run_checks(checks: list[CheckResult], *, raise_on_failure: bool = False) -> list[CheckResult]:
     """Check-suite runner — the ``dbt test`` step of the flow
-    (py_pipeline/orchestration.py:274)."""
+    (py_pipeline/orchestration.py:274).
+
+    Counts every not-yet-evaluated check in ONE action: each violating
+    frame projects to its check's index, the union is grouped by index
+    and counted, and an index absent from the answer had no violations.
+    Checks over the same star schema share its scans and exchanges
+    inside that one plan instead of re-planning and re-running it twice
+    per check. Samples are then fetched for failed checks only, so on
+    return every result is fully evaluated: a later run that rewrites
+    the lake cannot change it."""
+    pending = [c for c in checks if c._violations is None]
+    if pending:
+        tagged = reduce(
+            DataFrame.union, [c._bad.select(F.lit(i).alias("check")) for i, c in enumerate(pending)]
+        )
+        counts = dict(tagged.groupBy("check").count().collect())
+        for i, c in enumerate(pending):
+            c._violations = counts.get(i, 0)
+    for c in checks:
+        c.sample  # evaluated now: a failure fetches its rows, all release their frames
     failed = [c for c in checks if not c.passed]
     if failed and raise_on_failure:
         raise SchemaErrors([f"{c.name}: {c.violations} violations" for c in failed])

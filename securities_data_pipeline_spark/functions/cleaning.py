@@ -19,8 +19,11 @@ Semantics pinned against the reference:
 - ``future_stack=True`` keeps rows whose OHLCV are all null (no
   dropna) — so does ``stack()`` here.
 - All-null wide columns (failed downloads, stray "Adj Close" ticker
-  columns) are pruned first via one aggregate pass
-  (transform.py:77-79).
+  columns) are pruned on the LONG frame (transform.py:77-79): one
+  small job collects the symbols with any non-null OHLCV value, then
+  an ``isin`` filter keeps them. An all-null column unpivots to NULL
+  whether or not it was dropped first, so the rows are the same as
+  pruning wide columns — without one ``count`` per wide column.
 """
 
 from __future__ import annotations
@@ -115,7 +118,7 @@ def unpivot_wide_prices(df: DataFrame) -> DataFrame:
 
 def transform_prices(df: DataFrame, asset_category: str) -> DataFrame:
     """Raw wide price matrix → long validated rows (transform.py:72-90):
-    prune all-null columns → unpivot → timestamp→date → FX recode."""
+    unpivot → prune all-null tickers → timestamp→date → FX recode."""
     if df.isEmpty():
         # an empty fetch must short-circuit to an empty LONG-schema
         # frame — returning the raw wide frame would crash downstream
@@ -127,8 +130,17 @@ def transform_prices(df: DataFrame, asset_category: str) -> DataFrame:
             "date_stamp date, symbol string, open double, high double, "
             "low double, close double, volume bigint",
         )
-    long_df = unpivot_wide_prices(drop_all_null_columns(df))
-    out = long_df.select(
+    long_df = unpivot_wide_prices(df)
+    live = [
+        r.symbol
+        for r in long_df.where("coalesce(open, high, low, close, volume) IS NOT NULL")
+        .select("symbol")
+        .distinct()
+        .collect()
+    ]
+    if not live:
+        raise ValueError("no {Field}_{TICKER} columns found in wide price frame")
+    out = long_df.where(F.col("symbol").isin(live)).select(
         F.to_date(F.col("date")).alias("date_stamp"),
         "symbol",
         "open",

@@ -93,3 +93,70 @@ def test_observed_counts_piggyback_on_action(spark):
     )
     assert observed.count() == 3  # the action that drives the metrics
     assert obs.get == {"n_rows": 3, "null_symbols": 1}
+
+
+def _broken_star(spark):
+    """A dim/fct pair that breaks each of the flow's seven checks."""
+    import datetime as dt
+
+    D = dt.date
+    dim = spark.createDataFrame(
+        [("A", "Stock"), ("A", "FX"), (None, "Stock"), ("B", "Bond"), ("C", "FX")],
+        "symbol string, asset_type string",
+    )  # duplicate A, NULL symbol, 'Bond', childless C
+    fct = spark.createDataFrame(
+        [
+            ("A", D(2025, 1, 1)),
+            ("B", D(2025, 1, 1)),
+            (None, D(2025, 1, 2)),
+            ("A", None),
+            ("Z", D(2025, 1, 1)),
+            ("Z", D(2025, 1, 2)),
+        ],
+        "symbol string, date_stamp date",
+    )  # NULL symbol, NULL date, orphan Z (two rows)
+    return dim, fct
+
+
+def _suite(dim, fct):
+    return [
+        check_unique(dim, "symbol"),
+        check_not_null(dim, "symbol"),
+        check_accepted_values(dim, "asset_type", ["FX", "Stock"]),
+        check_not_null(fct, "symbol"),
+        check_not_null(fct, "date_stamp"),
+        check_relationships(fct, "symbol", dim, "symbol"),
+        check_relationships(dim, "symbol", fct, "symbol"),
+    ]
+
+
+def test_fused_suite_on_failing_data(spark):
+    """One fused count for the suite gives every check the violations
+    and sample it gets when evaluated alone."""
+    import datetime as dt
+
+    checks = _suite(*_broken_star(spark))
+    assert checks[0].violations == 1  # read before run_checks: evaluates alone
+    results = run_checks(checks)
+    got = [(c.name, c.passed, c.violations, {tuple(r) for r in c.sample}) for c in results]
+    assert got == [
+        ("unique(symbol)", False, 1, {("A", 2)}),
+        ("not_null(symbol)", False, 1, {(None, "Stock")}),
+        ("accepted_values(asset_type)", False, 1, {("Bond",)}),
+        ("not_null(symbol)", False, 1, {(None, dt.date(2025, 1, 2))}),
+        ("not_null(date_stamp)", False, 1, {("A", None)}),
+        ("relationships(symbol->symbol)", False, 2, {("Z",)}),
+        ("relationships(symbol->symbol)", False, 1, {("C",)}),
+    ]
+
+
+def test_run_checks_results_outlive_their_input(spark, tmp_path):
+    """After run_checks every result is evaluated: rewriting the files
+    the checks read does not change it."""
+    path = str(tmp_path / "dim")
+    spark.createDataFrame([("A",), ("A",), ("B",)], "symbol string").write.parquet(path)
+    results = run_checks([check_unique(spark.read.parquet(path), "symbol")])
+    spark.createDataFrame([("C",)], "symbol string").write.mode("overwrite").parquet(path)
+    assert [(c.passed, c.violations, [tuple(r) for r in c.sample]) for c in results] == [
+        (False, 1, [("A", 2)])
+    ]

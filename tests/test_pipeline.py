@@ -78,3 +78,32 @@ def test_etl_flow_incremental_second_run(spark, tmp_path):
     gap = fct[("2025-01-02", "EURUSD")]
     assert gap.close == 1.15346  # ffilled from day-1 rounded close
     assert gap.volume == 0
+
+
+def test_etl_flow_flags_stock_missing_from_symbols(spark, tmp_path):
+    """A priced stock absent from the symbols scrape is a fct orphan:
+    only relationships(fct->dim) fails, once per fct row of that ticker."""
+    stock = spark.createDataFrame(
+        [
+            (dt.datetime(2025, 1, 1), 10.0, 11.0, 9.0, 10.5, 100, 5.0, 6.0, 4.0, 5.5, 7),
+            (dt.datetime(2025, 1, 2), 10.1, 11.1, 9.1, 10.6, 101, 5.1, 6.1, 4.1, 5.6, 8),
+        ],
+        "date timestamp, Open_AAA double, High_AAA double, Low_AAA double, "
+        "Close_AAA double, Volume_AAA long, Open_ZZZ double, High_ZZZ double, "
+        "Low_ZZZ double, Close_ZZZ double, Volume_ZZZ long",
+    )
+    res = etl_flow(
+        spark,
+        str(tmp_path / "lake"),
+        raw_fx_prices_wide=_wide_fx(spark),
+        raw_stock_prices_wide=stock,
+        raw_stock_symbols=_raw_symbols(spark),
+        date_stamp=D(2025, 1, 1),
+    )
+    failed = [c for c in res.checks if not c.passed]
+    assert [c.name for c in failed] == ["relationships(symbol->symbol)"]
+    assert failed[0] is res.checks[5]  # fct -> dim, not dim -> fct
+    zzz_rows = res.models["fct_prices"].where("symbol = 'ZZZ'").count()
+    assert zzz_rows == 2
+    assert failed[0].violations == zzz_rows
+    assert "ZZZ" in {r[0] for r in failed[0].sample}

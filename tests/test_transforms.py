@@ -111,3 +111,50 @@ def test_surrogate_key_dbt_parity(spark):
     ]
     assert got == want
     assert len(set(got)) == 3
+
+
+def _wide_sparse(spark, volume_x):
+    """AAA priced; X has only a Volume value (or none); DEAD all null."""
+    return spark.createDataFrame(
+        [
+            (dt.datetime(2025, 1, 1), 10.0, 100, None, None, volume_x, None),
+            (dt.datetime(2025, 1, 2), 10.5, 110, None, None, None, None),
+        ],
+        "date timestamp, Close_AAA double, Volume_AAA long, Open_X double, Close_X double, "
+        "Volume_X long, Close_DEAD double",
+    )
+
+
+def test_transform_prices_keeps_volume_only_ticker(spark):
+    out = transform_prices(_wide_sparse(spark, 5), "sp_stocks")
+    x = sorted((str(r.date_stamp), r.close, r.volume) for r in out.where("symbol = 'X'").collect())
+    assert x == [("2025-01-01", None, 5), ("2025-01-02", None, None)]
+    assert {r.symbol for r in out.collect()} == {"AAA", "X"}  # all-null DEAD dropped
+
+
+def test_transform_prices_drops_all_null_ticker(spark):
+    out = transform_prices(_wide_sparse(spark, None), "sp_stocks")
+    assert sorted((r.symbol, str(r.date_stamp)) for r in out.collect()) == [
+        ("AAA", "2025-01-01"),
+        ("AAA", "2025-01-02"),
+    ]
+
+
+def test_transform_prices_all_null_frame_raises(spark):
+    wide = _wide_sparse(spark, None).select("date", "Open_X", "Close_X", "Volume_X")
+    with pytest.raises(ValueError, match=r"no \{Field\}_\{TICKER\} columns found"):
+        transform_prices(wide, "sp_stocks")
+
+
+def test_transform_prices_matches_wide_column_pruning(spark):
+    """Long-frame ticker pruning returns the rows wide-column pruning did."""
+    from pyspark.sql import functions as F
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    want = unpivot_wide_prices(drop_all_null_columns(_wide(spark))).select(
+        F.to_date("date").alias("date_stamp"), "symbol", "open", "high", "low", "close", "volume"
+    )
+    got = rows(transform_prices(_wide(spark), "sp_stocks"))
+    assert got == rows(want) and len(got) == 4
