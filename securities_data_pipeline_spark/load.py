@@ -23,18 +23,25 @@ Physical strategy (100 TB design):
   (call-shape: forPath → merge(pk cond) → updateAll/insertAll →
   execute) and ships a ``skipif``-gated real-engine test that
   activates on any cluster where ``import delta`` succeeds.
-- **Plain-parquet fallback** (this container): tables are
-  **partitioned by date_stamp** and merged via *dynamic partition
-  overwrite* — only partitions present in the incoming batch are read
-  (partition pruning), anti-joined, unioned, rewritten. A daily
-  incremental batch touches 1-2 partitions of a multi-year table, so
-  the rewrite cost is O(batch), not O(table) — same asymptotics as a
-  Delta MERGE with partition pruning.
+- **Plain-parquet fallback** (no Delta): one write path.
+  ``replace`` and a table's first load are a static overwrite. A
+  ``merge`` anti-joins the target against the batch's keys, unions the
+  batch in, stages the result in a sibling directory (the recovery
+  copy) and overwrites the table from the stage. Tables are
+  **partitioned by date_stamp**: when the batch adds no column, the
+  merge reads only the partitions present in the batch (partition
+  pruning) and rewrites them by *dynamic* partition overwrite, so a
+  daily batch touching 1-2 partitions of a multi-year table costs
+  O(batch), not O(table) — same asymptotics as a Delta MERGE with
+  partition pruning. An unpartitioned table, or a batch that evolves
+  the schema, is rewritten whole by a *static* overwrite.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
 
 try:  # pragma: no cover - not installed in the test container
@@ -99,6 +106,30 @@ def _delta_merge(spark: SparkSession, incoming: DataFrame, path: str, keys: list
     )
 
 
+def match_column_case(df: DataFrame, columns: Iterable[str]) -> DataFrame:
+    """Rename each column of ``df`` that equals one of ``columns`` up to
+    case onto that column's casing. Both sinks (the parquet merge below
+    and ``warehouse.JdbcMergeSink``) case-fold when they decide whether
+    a batch evolves the table, so a batch 'Close' against an existing
+    'close' must land on 'close': a case-distinct second column would
+    split later parquet reads across the two, and the warehouse merge
+    DML, which quotes batch names verbatim, would fail its INSERT on a
+    case-sensitive engine (Postgres)."""
+    by_fold = {c.casefold(): c for c in columns}
+    renames = {c: by_fold[c.casefold()] for c in df.columns if by_fold.get(c.casefold(), c) != c}
+    return df.withColumnsRenamed(renames) if renames else df
+
+
+def _overwrite(
+    df: DataFrame, partition_by: tuple[str, ...], partition_mode: str
+) -> DataFrameWriter:
+    """Overwrite writer; ``partition_mode`` is Spark's
+    ``partitionOverwriteMode``, set per write so the session default
+    never decides how much of a table an overwrite clears."""
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", partition_mode)
+    return writer.partitionBy(*partition_by) if partition_by else writer
+
+
 def merge_upsert(
     spark: SparkSession,
     incoming: DataFrame,
@@ -118,12 +149,8 @@ def merge_upsert(
     incoming = dedupe_on_keys(incoming, keys)
     exists = _table_exists(spark, path)
 
-    writer = incoming.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-
     if mode == "replace" or not exists:
-        writer.mode("overwrite").parquet(path)
+        _overwrite(incoming, partition_by, "static").parquet(path)
         spark.catalog.refreshByPath(path)
         return
 
@@ -138,28 +165,20 @@ def merge_upsert(
     # known columns write null. allowMissingColumns handles both
     # directions. Type changes on an existing column are out of scope
     # (dlt coerces; here the parquet read would surface the conflict).
-    # An evolving batch forces a FULL rewrite even when partitioned:
-    # plain parquet has no table schema, and leaving untouched
-    # partitions on the old column set would make later reads sample-
-    # dependent (Delta/mergeSchema is the at-scale answer; a full
-    # rewrite per evolution is the honest parquet one).
-    # Case-insensitive evolution detection, matching the warehouse
-    # sink's evolve_statements: a batch 'Close' must map onto an
-    # existing 'close' (rename to the table's casing), not trigger a
-    # full rewrite that unions in a case-distinct duplicate column
-    # splitting subsequent reads/merges across the two.
-    target_by_fold = {c.casefold(): c for c in target.columns}
-    renames = {
-        c: target_by_fold[c.casefold()]
-        for c in incoming.columns
-        if c.casefold() in target_by_fold and c != target_by_fold[c.casefold()]
-    }
-    if renames:
-        incoming = incoming.withColumnsRenamed(renames)
+    # Evolution is detected case-insensitively, like the warehouse
+    # sink's evolve_statements, after case variants take the table's
+    # casing (match_column_case).
+    incoming = match_column_case(incoming, target.columns)
     evolving = bool(
-        {c.casefold() for c in incoming.columns} - set(target_by_fold)
+        {c.casefold() for c in incoming.columns} - {c.casefold() for c in target.columns}
     )
-    if partition_by and not evolving:
+    # An evolving batch forces a FULL (static) rewrite even when
+    # partitioned: plain parquet has no table schema, and leaving
+    # untouched partitions on the old column set would make later reads
+    # sample-dependent (Delta/mergeSchema is the at-scale answer; a
+    # full rewrite per evolution is the honest parquet one).
+    pruned = bool(partition_by) and not evolving
+    if pruned:
         # restrict the rewrite to partitions present in the batch:
         # IN-list on partition values → partition pruning at the scan.
         # NULL partition values need an explicit isNull arm — isin()
@@ -172,48 +191,23 @@ def merge_upsert(
         if len(non_null) != len(pvals):
             pred = pred | F.col(pcol).isNull()
         target = target.where(pred)
-        survivors = target.join(incoming.select(*keys), keys, "left_anti")
-        merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        merged = _stage_merged(spark, merged, path)
-        try:
-            (
-                merged.write.partitionBy(*partition_by)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        except Exception as ex:
-            # the stage IS the recovery copy (see _stage_merged): a
-            # mid-overwrite failure may have already cleared target
-            # partitions, so the stage must survive for manual restore
-            raise RuntimeError(
-                f"merge overwrite of {path} failed mid-write; the staged "
-                f"merge result is intact at {_stage_path(path)} — restore "
-                "the table from it"
-            ) from ex
-        _delete_path(spark, _stage_path(path))
-    else:
-        # unpartitioned merge, or a schema-evolving partitioned one
-        # (full rewrite keeps every file on the evolved column set)
-        survivors = target.join(incoming.select(*keys), keys, "left_anti")
-        merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        merged = _stage_merged(spark, merged, path)
-        try:
-            writer = merged.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-        except Exception as ex:
-            # static overwrite clears the target before writing, so a
-            # mid-write failure (OOM, disk full) leaves NO target — the
-            # stage directory is then the only surviving copy of the
-            # table; never delete it on the failure path
-            raise RuntimeError(
-                f"merge overwrite of {path} failed mid-write; the staged "
-                f"merge result is intact at {_stage_path(path)} — restore "
-                "the table from it"
-            ) from ex
-        _delete_path(spark, _stage_path(path))
+    survivors = target.join(incoming.select(*keys), keys, "left_anti")
+    merged = survivors.unionByName(incoming, allowMissingColumns=True)
+    merged = _stage_merged(spark, merged, path)
+    try:
+        _overwrite(merged, partition_by, "dynamic" if pruned else "static").parquet(path)
+    except Exception as ex:
+        # the stage IS the recovery copy (see _stage_merged): a static
+        # overwrite clears the whole target before writing, a dynamic
+        # one may already have cleared the batch's partitions, so after
+        # a mid-write failure (OOM, disk full) the stage may be the only
+        # surviving copy of those rows; never delete it on this path
+        raise RuntimeError(
+            f"merge overwrite of {path} failed mid-write; the staged "
+            f"merge result is intact at {_stage_path(path)} — restore "
+            "the table from it"
+        ) from ex
+    _delete_path(spark, _stage_path(path))
 
     # clear the shared file-status cache so *new* reads list the
     # rewritten files. NB: DataFrames created BEFORE this merge hold
@@ -243,28 +237,6 @@ def _stage_merged(spark: SparkSession, merged: DataFrame, path: str) -> DataFram
     stage = _stage_path(path)
     merged.write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)
-
-
-def compact_table(
-    spark: SparkSession, path: str, partition_by: tuple[str, ...] = ()
-) -> None:
-    """Rewrite a table to one file per partition (one file total when
-    unpartitioned) — the small-files maintenance job that incremental
-    merges eventually need (Delta's OPTIMIZE analog). Hash-partitioning
-    on the partition columns puts each partition value in exactly one
-    task → one output file per partition. Content is unchanged; run
-    out-of-band."""
-    df = spark.read.parquet(path)
-    if partition_by:
-        df = df.repartition(*[F.col(c) for c in partition_by])
-    else:
-        df = df.coalesce(1)
-    df = df.localCheckpoint(eager=True)
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode("overwrite").parquet(path)
-    spark.catalog.refreshByPath(path)
 
 
 def load_prices(spark: SparkSession, df: DataFrame, path: str) -> None:

@@ -37,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 DEC2 = "decimal(18,2)"
@@ -299,12 +300,6 @@ FROM embeddings
 """
 
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 ANALYTICS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "a8_corr_moments": a8_corr_moments,
     "w7_interval_range": w7_interval_range,
@@ -314,9 +309,9 @@ ANALYTICS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 ANALYTICS_ORACLES: dict[str, str] = {
     "a8_corr_moments": A8_SQL,
-    "w7_interval_range": _guard_events(W7_SQL),
+    "w7_interval_range": guard_events_sql(W7_SQL),
     "f_array_stats": F_ARRAY_STATS_SQL,
-    "w8_pattern_match": _guard_events(W8_PATTERN_SQL),
+    "w8_pattern_match": guard_events_sql(W8_PATTERN_SQL),
 }
 
 
@@ -395,7 +390,7 @@ FROM sets_ GROUP BY k ORDER BY k
 """
 
 ANALYTICS_QUERIES["a_k_anonymity"] = a_k_anonymity
-ANALYTICS_ORACLES["a_k_anonymity"] = _guard_events(A_K_ANONYMITY_SQL)
+ANALYTICS_ORACLES["a_k_anonymity"] = guard_events_sql(A_K_ANONYMITY_SQL)
 
 
 def a_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,7 +475,7 @@ FROM sets_ GROUP BY l ORDER BY l
 """
 
 ANALYTICS_QUERIES["a_l_diversity"] = a_l_diversity
-ANALYTICS_ORACLES["a_l_diversity"] = _guard_events(A_L_DIVERSITY_SQL)
+ANALYTICS_ORACLES["a_l_diversity"] = guard_events_sql(A_L_DIVERSITY_SQL)
 
 
 def w9_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,7 +548,7 @@ FROM picked WHERE rn = 1 ORDER BY user_id
 """
 
 ANALYTICS_QUERIES["w9_user_streaks"] = w9_user_streaks
-ANALYTICS_ORACLES["w9_user_streaks"] = _guard_events(W9_STREAKS_SQL)
+ANALYTICS_ORACLES["w9_user_streaks"] = guard_events_sql(W9_STREAKS_SQL)
 
 
 def a_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,7 +700,7 @@ FROM tc GROUP BY 1 ORDER BY 1
 """
 
 ANALYTICS_QUERIES["a_t_closeness"] = a_t_closeness
-ANALYTICS_ORACLES["a_t_closeness"] = _guard_events(A_T_CLOSENESS_SQL)
+ANALYTICS_ORACLES["a_t_closeness"] = guard_events_sql(A_T_CLOSENESS_SQL)
 
 
 def a_k_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -931,7 +926,7 @@ FROM tot t LEFT JOIN med m USING (cohort) ORDER BY t.cohort
 """
 
 ANALYTICS_QUERIES["w10_conversion_cohorts"] = w10_conversion_cohorts
-ANALYTICS_ORACLES["w10_conversion_cohorts"] = _guard_events(W10_CONVERSION_SQL)
+ANALYTICS_ORACLES["w10_conversion_cohorts"] = guard_events_sql(W10_CONVERSION_SQL)
 
 
 def a_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,7 +990,7 @@ FROM counts ORDER BY from_type, to_type
 """
 
 ANALYTICS_QUERIES["a_markov_transition"] = a_markov_transition
-ANALYTICS_ORACLES["a_markov_transition"] = _guard_events(A_MARKOV_SQL)
+ANALYTICS_ORACLES["a_markov_transition"] = guard_events_sql(A_MARKOV_SQL)
 
 
 #: session gap for the concurrency sweep — the w4 sessionization value
@@ -1117,4 +1112,4 @@ FROM swept GROUP BY day ORDER BY day
 """
 
 ANALYTICS_QUERIES["w11_peak_concurrency"] = w11_peak_concurrency
-ANALYTICS_ORACLES["w11_peak_concurrency"] = _guard_events(W11_CONCURRENCY_SQL)
+ANALYTICS_ORACLES["w11_peak_concurrency"] = guard_events_sql(W11_CONCURRENCY_SQL)

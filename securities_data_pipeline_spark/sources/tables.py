@@ -106,9 +106,11 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       acceptable (these are all intra-QUERY intermediates — a lost
       block fails the query, the retry recomputes from source).
     - ``reliable`` — ``DataFrame.checkpoint`` into
-      ``SPARK_GRAFT_CHECKPOINT_DIR`` (shared storage): survives
-      executor loss, the 100 TB choice when a trainer/certificate
-      query runs long enough that mid-query executor churn is expected.
+      ``SPARK_GRAFT_CHECKPOINT_DIR`` (shared storage; a ``ValueError``
+      if it is unset, never a directory other code happened to set):
+      survives executor loss, the 100 TB choice when a trainer/
+      certificate query runs long enough that mid-query executor churn
+      is expected.
       Same lineage truncation, so the driver-loop operators keep their
       O(1)-plan-per-round property.
 
@@ -124,10 +126,13 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     SCALE.md §materialize-once documents the rationale."""
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
     if mode == "reliable":
-        spark = df.sparkSession
         ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if ckpt_dir:
-            spark.sparkContext.setCheckpointDir(ckpt_dir)
+        if not ckpt_dir:
+            raise ValueError(
+                "SPARK_GRAFT_MATERIALIZE=reliable needs SPARK_GRAFT_CHECKPOINT_DIR "
+                "set to a directory on storage every executor can reach"
+            )
+        df.sparkSession.sparkContext.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 

@@ -4,7 +4,7 @@ import datetime as dt
 import glob
 
 from securities_data_pipeline_spark.engine import Engine
-from securities_data_pipeline_spark.load import compact_table, load_prices
+from securities_data_pipeline_spark.plans.compaction import compact_small_files
 
 D = dt.date
 
@@ -20,17 +20,21 @@ def test_engine_facade(spark):
 def test_compact_table_merges_small_files(spark, tmp_path):
     path = str(tmp_path / "prices")
     S = "date_stamp date, symbol string, close double"
-    # two append writes → at least two files in the same partition
+    days = (D(2025, 1, 1), D(2025, 1, 2))
+    # two append writes → two files in each of two partitions
     for batch in (["AAA", "BBB"], ["CCC", "DDD"]):
-        rows = [(D(2025, 1, 1), s, 1.0) for s in batch]
-        spark.createDataFrame(rows, S).coalesce(1).write.partitionBy("date_stamp").mode(
-            "append"
-        ).parquet(path)
-    before = spark.read.parquet(path).orderBy("symbol").collect()
-    n_files_before = len(glob.glob(path + "/date_stamp=*/**/*.parquet", recursive=True))
-    assert n_files_before >= 2
-    compact_table(spark, path, partition_by=("date_stamp",))
-    n_files_after = len(glob.glob(path + "/date_stamp=*/**/*.parquet", recursive=True))
-    after = spark.read.parquet(path).orderBy("symbol").collect()
-    assert n_files_after == 1
+        rows = [(d, s, 1.0) for d in days for s in batch]
+        spark.createDataFrame(rows, S).repartition(2, "date_stamp").write.partitionBy(
+            "date_stamp"
+        ).mode("append").parquet(path)
+    before = spark.read.parquet(path).orderBy("date_stamp", "symbol").collect()
+
+    def files_per_partition():
+        return [len(glob.glob(f"{path}/date_stamp={d}/*.parquet")) for d in days]
+
+    assert files_per_partition() == [2, 2]
+    # a target above the table's size packs each partition into one bin
+    compact_small_files(spark, path, target_bytes=1 << 30)
+    after = spark.read.parquet(path).orderBy("date_stamp", "symbol").collect()
+    assert files_per_partition() == [1, 1]
     assert [tuple(r) for r in before] == [tuple(r) for r in after]  # content unchanged

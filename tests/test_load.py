@@ -3,6 +3,8 @@
 
 import datetime as dt
 
+import pytest
+
 from securities_data_pipeline_spark.load import dedupe_on_keys, load_fx_symbols, load_prices
 
 D = dt.date
@@ -646,16 +648,39 @@ def test_price_fetch_partial_batch_failure_quarantines_not_aborts(spark):
     assert "BAD" in failed and failed == set(symbols) - got
 
 
-def test_failed_overwrite_preserves_recovery_stage(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "partition_by, target, staged",
+    [
+        # unpartitioned: static overwrite, the stage is the whole table
+        ((), [(1, 1, "a"), (2, 2, "b")], {(1, 1, "a"), (2, 2, "B"), (3, 2, "c")}),
+        # partitioned, non-evolving: dynamic overwrite of the batch's
+        # partition; the stage holds that partition's merged rows and
+        # never the untouched partition 9
+        (
+            ("p",),
+            [(1, 2, "a"), (2, 2, "b"), (4, 9, "z")],
+            {(1, 2, "a"), (2, 2, "B"), (3, 2, "c")},
+        ),
+    ],
+    ids=["static", "dynamic"],
+)
+def test_failed_overwrite_preserves_recovery_stage(
+    spark, tmp_path, monkeypatch, partition_by, target, staged
+):
     """ADVICE r4 (medium): a mid-overwrite failure must LEAVE the stage
-    directory — static overwrite clears the target before writing, so
-    after a crash the stage is the only surviving copy of the table.
+    directory — static overwrite clears the target before writing, and
+    a dynamic one may already have cleared the batch's partitions, so
+    after a crash the stage is the only surviving copy of those rows.
     The raised error names the stage path so an operator can restore."""
     from securities_data_pipeline_spark import load as load_mod
     from securities_data_pipeline_spark.load import _stage_path, merge_upsert
 
+    schema = "k int, p int, v string"
     path = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
+    writer = spark.createDataFrame(target, schema).write
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
     real_stage = load_mod._stage_merged
 
@@ -676,14 +701,13 @@ def test_failed_overwrite_preserves_recovery_stage(spark, tmp_path, monkeypatch)
         load_mod, "_stage_merged",
         lambda sp, merged, p: _FailingWrite(real_stage(sp, merged, p)),
     )
-    incoming = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
-    import pytest as _pytest
+    incoming = spark.createDataFrame([(2, 2, "B"), (3, 2, "c")], schema)
 
-    with _pytest.raises(RuntimeError, match="__merge_stage"):
-        merge_upsert(spark, incoming, path, keys=["k"])
+    with pytest.raises(RuntimeError, match="__merge_stage"):
+        merge_upsert(spark, incoming, path, keys=["p", "k"], partition_by=partition_by)
     # the stage survived and holds the complete merged result
-    staged = {(r.k, r.v) for r in spark.read.parquet(_stage_path(path)).collect()}
-    assert staged == {(1, "a"), (2, "B"), (3, "c")}
+    got = {(r.k, r.p, r.v) for r in spark.read.parquet(_stage_path(path)).collect()}
+    assert got == staged
 
 
 def test_jdbc_sink_validates_before_staging_and_reuses_connection(spark):

@@ -398,3 +398,19 @@ def test_materialize_reliable_mode_matches_default(spark, tmp_path, monkeypatch)
         for f in fs
     ]
     assert files, "reliable mode wrote no checkpoint files"
+
+
+def test_materialize_reliable_mode_requires_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """Reliable mode without SPARK_GRAFT_CHECKPOINT_DIR raises a
+    ValueError naming the variable, whether or not some other code
+    already set a checkpoint directory on the context."""
+    from securities_data_pipeline_spark.sources.tables import materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    df = spark.range(3)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CHECKPOINT_DIR"):
+        materialize(df)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "elsewhere"))
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CHECKPOINT_DIR"):
+        materialize(df, eager=True)
